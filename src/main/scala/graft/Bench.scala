@@ -1,13 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Cross-round bench comparison helpers — separated from the main so the
-  * artifact-parsing contract is law-testable (Round17Spec). */
+/** Cross-run bench comparison helpers — separated from the main so the
+  * artifact-parsing contract is law-testable (BenchSpec). */
 object BenchCompare {
 
   /** Per-query min from a prior bench artifact: prefer
-    * `query_stats.<q>.min` (the r16+ spread instrument), fall back to
-    * the flat `queries` map (earlier artifacts recorded min-of-reps
+    * `query_stats.<q>.min` (the spread instrument), fall back to the
+    * flat `queries` map (older artifacts recorded min-of-reps
     * directly). Negative sentinels (failed queries) are dropped — a
     * breakage must not become a comparison baseline. */
   def parsePrevMins(json: String): Map[String, Double] = {
@@ -53,65 +52,62 @@ object BenchCompare {
   }
 }
 
-/** Driver-run benchmark: every SparkEntry query on SPARK_GRAFT_SF_DIR at
-  * local[32], one JSON line. AQE on; shuffle partitions sized to the core
-  * count (not 200 — at local scale oversized shuffles dominate runtime). */
+/** Benchmark: every SparkEntry query on SPARK_GRAFT_SF_DIR under
+  * [[graft.util.Sessions.local]], one JSON line. */
 object Bench {
+
+  /** Time one build line. A build that throws is named on stderr and
+    * returns the -1 sentinel, so it lands in `failed` and is left out of
+    * `total` instead of reading as a fast build. */
+  def timed(name: String)(body: => Unit): (String, Double) = {
+    val t0 = System.nanoTime()
+    val sec = try { body; (System.nanoTime() - t0) / 1e9 } catch {
+      case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getClass.getName}")
+        -1.0
+    }
+    System.err.println(f"[bench] $name%-28s $sec%8.2fs")
+    name -> sec
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // optional comma-separated query-name filter for focused A/B runs
-    // (e.g. the round-13 q81/q82 regression adjudication); timing
-    // semantics are untouched — unselected queries are just skipped
+    val cpus = graft.util.Sessions.cpus
+    // optional comma-separated query-name filter for focused A/B runs;
+    // timing semantics are untouched — unselected queries are just skipped
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def selected(name: String): Boolean = only.forall(_.contains(name))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "128m")
-      // columnar-cache compression costs CPU at build time; the box has
-      // RAM to spare, so cache uncompressed
-      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // heap comes from build.sbt's -Xmx (SPARK_DRIVER_MEM, default 32g);
-      // spark.driver.memory set here post-JVM-start would be a no-op
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.local()
     // Warmup: run every query once at the smallest SF. The schemas are
     // identical across SFs, so the generated whole-stage-codegen classes
     // are byte-identical and Spark's codegen cache + the JIT are fully
     // primed for the timed plans; data volume stays negligible.
     val warmDir = "/root/testdata/sf0.001"
+    // a warm-up failure usually predicts a timed-section failure; it is
+    // named in `failed` so the breakage cannot hide behind a clean total
+    val warmupFailed = scala.collection.mutable.ArrayBuffer.empty[String]
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
       SparkEntry.queries.toSeq.sortBy(_._1).filter(q => selected(q._1)).foreach { case (name, fn) =>
-        // a warmup failure usually predicts a timed-section failure; name
-        // it now so the breakage is visible before the metrics line
-        try fn(spark, warmDir).count() catch {
+        try fn(spark, warmDir).count(): Unit catch {
           case e: Throwable =>
             System.err.println(s"[bench] warmup $name failed: ${e.getClass.getName}")
+            warmupFailed += s"warmup:$name"
         }
       }
-      // Drop the warm-dir cube + shingle caches before the timed section:
+      // Drop the warm-dir build-once caches before the timed section:
       // left pinned (uncompressed columnar) they compete for executor
       // memory/GC with the sf target's build and bleed into its line items
       // (observed: build_cube 12.7s -> 37.9s with the caches held).
       graft.builders.Tpch.invalidate(spark, warmDir)
-      // pairs cache sits atop the shingle cache — drop it first
-      graft.queries.ExtensionQueries.invalidateNeardupPairs(spark, warmDir)
-      graft.queries.ExtensionQueries.invalidateShingles(spark, warmDir)
-      graft.queries.ExtensionQueries.invalidateV4(spark, warmDir)
+      graft.queries.ExtensionQueries.invalidate(spark, warmDir)
       System.gc()
     }
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
     // Multi-point load sampling: a single end-of-run load_avg cannot
     // distinguish "the box was busy all run" from "a burst hit one
-    // query" — three rounds of verdict time went to clean-clone A/B
-    // adjudication of exactly that ambiguity. Samples land in the JSON
-    // as load_avg_samples (start / after-builds / mid-queries / end).
+    // query". Samples land in the JSON as load_avg_samples
+    // (start / after-builds / mid-queries / end).
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     val loadSamples = scala.collection.mutable.ArrayBuffer.empty[Double]
     def sampleLoad(): Unit = loadSamples += osBean.getSystemLoadAverage
@@ -121,17 +117,7 @@ object Bench {
     // cube build + persisted-cache fill and the shared shingle-index build
     // get their OWN line items. Without this, whichever query touches a
     // cold cache first absorbs the whole build cost and per-query numbers
-    // are incomparable across rounds.
-    def timed(name: String)(body: => Unit): (String, Double) = {
-      val t0 = System.nanoTime()
-      try body catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getClass.getName}")
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[bench] $name%-28s $sec%8.2fs")
-      name -> sec
-    }
+    // are incomparable across runs.
     val builds = Seq(
       timed("build_cube") { graft.builders.Tpch.warm(spark, sfDir) },
       timed("build_shingles") { graft.queries.ExtensionQueries.warmShingles(spark, sfDir) },
@@ -149,11 +135,10 @@ object Bench {
         graft.queries.ExtensionQueries.warmV4(spark, sfDir) })
     // Each query line is the MIN of `SPARK_GRAFT_BENCH_REPS` runs
     // (default 3): ambient machine load swings single-shot wall times
-    // 30-50% on this shared box, the minimum is the standard least-noise
-    // estimator of the plan's actual cost, and two rounds of verdict time
-    // went to re-adjudicating 2-run minima — the third rep is the cheap
-    // fix. The build lines stay single-shot (a second run would measure
-    // the warm cache, not the build).
+    // 30-50% on a shared box, the minimum is the standard least-noise
+    // estimator of the plan's actual cost, and 2-run minima proved too
+    // noisy to compare. The build lines stay single-shot (a second run
+    // would measure the warm cache, not the build).
     // parsed defensively: a malformed env value must not abort the run
     // after the builds have already spent their minutes
     val reps = math.max(1, scala.util.Try(
@@ -162,10 +147,10 @@ object Bench {
     // Per-query SPREAD travels in the artifact: min (the noise-robust
     // plan-cost statistic on a shared box — headline, unchanged), median
     // and max across reps, and a `suspect` flag when (max-min)/min
-    // exceeds SuspectBand — so a q45-style cross-round excursion
-    // self-adjudicates from BENCH_r{N}.json alone (wide spread = ambient
-    // noise; tight spread at a shifted min = a real plan change) instead
-    // of costing a clean-clone A/B session.
+    // exceeds SuspectBand — so a cross-run excursion self-adjudicates
+    // from the artifact alone (wide spread = ambient noise; tight spread
+    // at a shifted min = a real plan change) instead of costing a
+    // clean-clone A/B session.
     val SuspectBand = 0.5
     final case class QStat(min: Double, med: Double, max: Double,
                            suspect: Boolean)
@@ -196,7 +181,7 @@ object Bench {
       val ok = runs.filter(_._2 >= 0)
       // all runs failed: emit a -1 sentinel time rather than the near-zero
       // failure latency, so a hard-broken query can't read as a speedup in
-      // cross-round bench comparisons
+      // cross-run bench comparisons
       val (sec, n) = if (ok.nonEmpty) ok.minBy(_._1) else (-1.0, -1L)
       val st = stat(ok.map(_._1))
       System.err.println(f"[bench] $name%-28s $sec%8.2fs  rows=$n" +
@@ -218,19 +203,18 @@ object Bench {
       .mkString("{", ",", "}")
     // failed queries (sentinel -1) are excluded from the headline total —
     // summing the negative sentinel would make a hard-broken query LOWER
-    // the total, reading as a speedup in cross-round comparisons — and
+    // the total, reading as a speedup in cross-run comparisons — and
     // NAMED in a "failed" array so a comparer that only reads the total
     // cannot mistake a breakage (whose runtime the total now omits) for
     // a speedup
-    val failed = results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
+    val failed = (warmupFailed ++ results.collect { case (k, v) if v < 0 => k })
+      .map(k => "\"" + k + "\"")
     val total = results.map(_._2).filter(_ >= 0).sum
-    // `reps` is recorded in the JSON so cross-round comparisons can tell a
+    // `reps` is recorded in the JSON so cross-run comparisons can tell a
     // real regression from a rep-count artifact (fewer reps -> higher
-    // minima); round 10 vs 11 was re-adjudicated for exactly this reason
-    // machine state travels IN the artifact: the round-13 star-query
-    // investigation burned a day proving a cross-round delta was
-    // environmental — load average, JVM/GC identity, and core count in
-    // the JSON make that diagnosable from the artifact alone
+    // minima). Machine state travels IN the artifact — load average,
+    // JVM/GC identity, and core count make an environmental cross-run
+    // delta diagnosable from the artifact alone.
     val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     val rt = Runtime.getRuntime
     val gcs = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
@@ -241,9 +225,8 @@ object Bench {
     }
     val machine =
       s""""machine":{"load_avg":${num(os.getSystemLoadAverage)},"load_avg_samples":[${loadSamples.map(num).mkString(",")}],"available_processors":${rt.availableProcessors},"max_heap_mb":${rt.maxMemory / (1024 * 1024)},"jvm":"${System.getProperty("java.vm.version")}","gc":"$gcNames"}"""
-    // Cross-round comparator: the verdict used to hand-join the previous
-    // round's reps-10 record to classify min-to-min deltas — the artifact
-    // now does it itself. Baseline: SPARK_GRAFT_BENCH_PREV if set, else
+    // Cross-run comparator: classifies min-to-min deltas against a
+    // previous reps-10 record. Baseline: SPARK_GRAFT_BENCH_PREV if set, else
     // the newest committed BENCH_REPS10_r<N>.json in the working dir;
     // per-query prev_min/delta land in query_stats, and any >1.3x
     // min-to-min shift lists itself in "regressions" pre-classified by
@@ -308,14 +291,13 @@ object Bench {
     // The harness archives only a bounded TAIL of stdout (~2000 chars) and
     // parses a JSON line out of it; with 125+ per-query entries the full
     // line is >4 KB, lands truncated mid-line in the tail, and nothing
-    // parses (BENCH_r12.json: parsed=null). So: persist the complete
+    // parses. So: persist the complete
     // record to a file and make the FINAL stdout line a compact summary
     // guaranteed to fit in the tail — any last-parseable-line or
     // first-parseable-line-of-tail parser finds it whole.
-    // The artifact name embeds the CORE COUNT: the round-17 driver's
-    // 8-core scaling run overwrote the 32-core run's BENCH_LATEST.json
-    // (the verdict's only complete end-of-round record) — per-cpus names
-    // make two runs at different cpus leave BOTH full artifacts on disk.
+    // The artifact name embeds the CORE COUNT, so two runs at different
+    // cpus leave BOTH full artifacts on disk instead of the second
+    // overwriting the first.
     val fullPath = java.nio.file.Paths.get(s"BENCH_LATEST_c$cpus.json")
       .toAbsolutePath
     scala.util.Try(java.nio.file.Files.write(fullPath,
@@ -326,7 +308,7 @@ object Bench {
     // blow the tail budget; they are recoverable from the full artifact
     // or SparkEntry.queries.keys.sorted). With ~166 entries this is
     // ~800 B, so the archived tail holds it whole next to the total
-    // line and a cross-round comparison can be reconstructed from the
+    // line and a cross-run comparison can be reconstructed from the
     // tail alone even if the full artifact is lost.
     println(s"""{"metric":"per_query_ms","cpus":"$cpus","order":"builds,then-name-asc","ms":[${results.map(r => math.round(r._2 * 1000)).mkString(",")}]}""")
     println(s"""{"metric":"total","value":${num(total)},"unit":"sec","reps":$reps,"cpus":"$cpus",$machine,"n_queries":${results.size},"n_failed":${failed.size},"n_suspect":$nSuspect,"n_regressions":${regressions.size},"failed":[${failed.take(10).mkString(",")}],"sf":"$sfDir","full":"$fullPath"}""")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Empirical scale probe: replicate the sf corpus N× (fresh ids, slightly
@@ -54,16 +54,7 @@ object ScaleProbe {
     require(factor >= 1, s"replication factor must be >= 1, got $factor")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val outJson = if (args.length > 2) args(2) else "SCALE.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "128m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.local()
 
     val docs1 = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")
@@ -614,8 +605,8 @@ object ScaleProbe {
       // corpus-sized work is the labeled count + thin filter + the
       // broadcast-coefficient predict scan, all linear; an UNbounded fit
       // is ungateable — LBFGS line-search count on identical data swings
-      // the r15-shaped step 12.5 s → 223 s run-to-run (r16 diagnosis),
-      // drowning any scaling signal in convergence luck
+      // this step 12.5 s → 223 s run-to-run, drowning any scaling signal
+      // in convergence luck
       "langid" -> timed(s"$tag trained language-id") {
         val labeled = d.withColumn("lang",
           element_at(array(lit("aa"), lit("bb"), lit("cc")),

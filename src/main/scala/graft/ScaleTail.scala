@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Exponent probe for the [[ScaleProbe]] superlinear TAIL: the full
@@ -25,16 +24,7 @@ object ScaleTail {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outJson = if (args.length > 1) args(1) else "SCALE_TAIL.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "128m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.local()
 
     val docs1 = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")
@@ -58,8 +48,8 @@ object ScaleTail {
       "dupshare" -> timed(s"$tag dup-ngram share") {
         graft.operators.Corpus.duplicateNgramShare(d, "doc_id", "text").count()
       },
-      // joined round 16: its 8x gate ratio crossed 4 (5.0x) — the same
-      // over-4 criterion that picked the original three steps
+      // its 8x gate ratio crossed 4 (5.0x) — the same over-4 criterion
+      // that picked the original three steps
       "lmscore" -> timed(s"$tag bigram LM score") {
         graft.operators.Corpus.lmScore(d, "doc_id", "text").count()
       },
@@ -68,8 +58,8 @@ object ScaleTail {
           d, d.filter(pmod(col("doc_id"), lit(5)) === 0), "doc_id", "text",
           budget = 100, buckets = 512).count()
       },
-      // joined round 17: its 8x gate ratio crossed 4 (4.1x) — the same
-      // over-4 criterion as the rest of the suite
+      // its 8x gate ratio crossed 4 (4.1x) — the same over-4 criterion
+      // as the rest of the suite
       "srcoverlap" -> timed(s"$tag source overlap matrix") {
         graft.operators.Corpus.sourceOverlap(
           d.withColumn("source", pmod(col("doc_id"), lit(20)).cast("string")),

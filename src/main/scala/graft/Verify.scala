@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,8 +9,8 @@ object Verify {
     * internal exactness only; every query's OUTPUT schema must cast money
     * to DOUBLE (or exact BIGINT cents). Spark and DuckDB widen decimal
     * sums differently (decimal(22,2) vs decimal(38,2)), so a raw decimal
-    * at the edge hash-mismatches even when every value is equal — q95
-    * proved it in round 10. Returns the offending column paths. */
+    * at the edge hash-mismatches even when every value is equal (q95
+    * once failed its oracle this way). Returns the offending column paths. */
   def decimalColumns(schema: StructType, prefix: String = ""): Seq[String] = {
     def walk(dt: DataType, path: String): Seq[String] = dt match {
       case _: DecimalType  => Seq(path)
@@ -29,16 +28,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "128m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

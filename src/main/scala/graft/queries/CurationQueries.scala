@@ -9,6 +9,7 @@ import graft.builders.Tpch
 import graft.functions.TextFunctions
 import graft.model.{DataCube, Hierarchy, Measure}
 import graft.operators.{Dedup, Events, Sampling, Similarity}
+import graft.util.SessionMemo
 
 /** Corpus-curation and sampling queries: splits, mixing weights, sequence
   * packing, chunking, stratified/diversity sampling, DSIR, quality
@@ -384,8 +385,8 @@ private[queries] trait CurationQueries { self: ExtensionQueryHelpers =>
     // while the data is linearly separable in very few iterations;
     // (b) maxTrainRows = 8192 label-stratified (inert at the fixture
     // SFs, the 100 TB bound — an UNbounded LBFGS fit is convergence-
-    // luck-dominated: 12.5 s → 223 s swings on identical data, the r16
-    // langid-gate lesson).
+    // luck-dominated: 12.5 s → 223 s swings on identical data, as the
+    // langid scale gate showed).
     val model = Quality.trainLangId(train, "text", "lang",
       numFeatures = 1 << 16, maxIter = 5, maxTrainRows = 8192)
     val pred = Quality.predictLang(model, test, "doc_id", "text")
@@ -439,37 +440,10 @@ private[queries] trait CurationQueries { self: ExtensionQueryHelpers =>
     * the second consumer must ride the first one's materialization
     * instead of re-running the whole chain (the chain is the single
     * most expensive composed computation in the suite). Frames are
-    * checkpoint-backed; dropping the reference on invalidate lets the
-    * ContextCleaner reclaim the blocks. */
-  private[queries] val v4Cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      (V4Stages, () => Unit)]()
-
-  private[queries] def v4Stages(s: SparkSession, dir: String): V4Stages = {
-    val entry = v4Cache.computeIfAbsent((s, dir), { case (ss, d) =>
-      val st = buildV4Stages(ss, d)
-      // hook registered AFTER the (throwing) build — the Tpch.cube
-      // contract: a failed build must not leak hook closures per retry
-      val detach = graft.util.SessionCleanup.onApplicationEnd(ss) { () =>
-        v4Cache.remove((ss, d)): Unit
-      }
-      (st, detach)
-    })
-    // application ended during build: the hook may have fired before the
-    // entry was inserted — evict post-insertion (see Tpch.cube), and FAIL
-    // rather than hand back frames bound to a stopped context
-    if (s.sparkContext.isStopped) {
-      Option(v4Cache.remove((s, dir))).foreach(_._2.apply())
-      throw new IllegalStateException(
-        "v4Stages: SparkContext stopped during chain build")
-    }
-    entry._1
-  }
-
-  /** Eviction hook (bench warmup-cache drop, mirrors
-    * [[ExtensionQueryHelpers.invalidateShingles]]). */
-  def invalidateV4(s: SparkSession, dir: String): Unit =
-    Option(v4Cache.remove((s, dir))).foreach(_._2.apply())
+    * checkpoint-backed, so invalidate has nothing to unpersist: dropping
+    * the reference lets the ContextCleaner reclaim the blocks. */
+  private[queries] val v4Stages =
+    new SessionMemo[V4Stages]("v4Stages", buildV4Stages, _ => ())
 
   /** Force-fill the v4-chain cache (bench `build_v4` accounting line —
     * the chain is consumed by q143 AND q152 and must not be absorbed
@@ -479,8 +453,7 @@ private[queries] trait CurationQueries { self: ExtensionQueryHelpers =>
     v4Stages(s, dir).cleaned.count(): Unit
 
   /** Label the jobs a stage boundary triggers (guide-§1.5 job labels:
-    * the bench UI and the JOBLOG profiler attribute time per stage).
-    * Restores the caller's previous description (advisor note r17). */
+    * the bench UI and the JOBLOG profiler attribute time per stage). */
   private def lbl[A](s: SparkSession, what: String)(body: => A): A =
     graft.util.Jobs.labeled(s.sparkContext, what)(body)
 
@@ -1385,8 +1358,8 @@ private[queries] trait CurationQueries { self: ExtensionQueryHelpers =>
       |         4 NULLS FIRST""".stripMargin
 
   // -------------------------------------------------------------------
-  // q119 — END-TO-END CURATION PIPELINE v2, composing the round-12
-  //        operators as ONE oracle row (the q106 doctrine): span-level
+  // q119 — END-TO-END CURATION PIPELINE v2, composing the span, LM and
+  //        CCNet operators as ONE oracle row (the q106 doctrine): span-level
   //        DECONTAMINATION against the src0 eval slice → bigram-LM
   //        scoring of the REBUILT text (model trained on the cleaned
   //        corpus itself — the stitch-point bigrams matter) → CCNet
@@ -2329,8 +2302,8 @@ private[queries] trait CurationQueries { self: ExtensionQueryHelpers =>
     * [[Sampling]] packTokenized* output and `counts` an INDEPENDENT
     * re-derivation of the encode it consumed (`countCol` its token
     * column). The scratch export is deleted once the verdicts have
-    * aggregated (ADVICE r16: the per-applicationId path otherwise
-    * accumulates one copy per run on a shared box). */
+    * aggregated (the per-applicationId path otherwise accumulates one
+    * copy per run on a shared box). */
   private def packedExportVerdict(s: SparkSession, d: DataFrame,
                                   packed0: DataFrame, counts: DataFrame,
                                   countCol: String, seqLen: Long,

@@ -23,6 +23,12 @@ object ExtensionQueries extends ExtensionQueryHelpers
     with TextQueries with RetrievalAnnQueries with StarQueries
     with CurationQueries {
 
+  /** Drop the near-dup pair set, the shingle index it reads, and the v4
+    * chain built for (s, dir). */
+  def invalidate(s: SparkSession, dir: String): Unit =
+    Seq[graft.util.SessionMemo[_]](neardupPairs3, shingles3, v4Stages)
+      .foreach(_.invalidate(s, dir))
+
   /** name -> (query fn, oracle SQL or null). */
   val all: Seq[(String, (SparkSession, String) => DataFrame, String)] = Seq(
     ("q16_text_stats", q16 _, q16Sql),

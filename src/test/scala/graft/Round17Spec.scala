@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Bpe, Corpus, Similarity}
 import graft.streaming.{DocStreaming, StoreCompaction, VecStreaming}
 
-/** Round-17 operator laws: the store-compaction maintenance loop
+/** Operator laws: the store-compaction maintenance loop
   * (maintainStore = storeHealth → conditional compact, healthy no-op),
   * quantized-index source lineage (hands-off rebuilds, by-name failures
   * when the recorded source is gone), the unified exactOov default, the
@@ -374,37 +374,5 @@ class Round17Spec extends SparkSpec {
       "query_id", "qtext", k = 8).orderBy("query_id", "rank").collect()
     assert(stored.sameElements(oneShot),
       "compacted store must rank exactly like a full rebuild")
-  }
-
-  // ------------------------------------------------------------------
-  // bench cross-round comparator
-  // ------------------------------------------------------------------
-
-  test("BenchCompare.parsePrevMins reads both artifact generations " +
-    "(query_stats wins over flat queries, failed sentinels dropped) " +
-    "and latestRecord picks the highest round") {
-    // r16+ shape: query_stats with min/med/max; flat queries alongside
-    val modern = """{"queries":{"q1":2.5,"q2":1.0,"q3":-1.0},
-      |"query_stats":{"q1":{"min":2.0,"med":2.5,"max":3.0,
-      |"suspect":false},"q3":{"min":-1.0,"med":-1.0,"max":-1.0,
-      |"suspect":false}}}""".stripMargin.replace("\n", "")
-    val m = BenchCompare.parsePrevMins(modern)
-    assert(m("q1") == 2.0, "query_stats.min wins over the flat value")
-    assert(m("q2") == 1.0, "flat fallback for entries without stats")
-    assert(!m.contains("q3"), "failed sentinel (-1) must be dropped")
-    // r15-and-earlier shape: flat queries only (values were min-of-reps)
-    val legacy = """{"queries":{"q1":3.25,"build_cube":10.5}}"""
-    val l = BenchCompare.parsePrevMins(legacy)
-    assert(l == Map("q1" -> 3.25, "build_cube" -> 10.5))
-    // latestRecord: highest round number wins, other files ignored
-    val dir = java.nio.file.Files.createTempDirectory("benchrec")
-    for (n <- Seq(2, 10, 9)) java.nio.file.Files.write(
-      dir.resolve(s"BENCH_REPS10_r$n.json"), "{}".getBytes("UTF-8"))
-    java.nio.file.Files.write(
-      dir.resolve("BENCH_r99.json"), "{}".getBytes("UTF-8"))
-    assert(BenchCompare.latestRecord(dir).map(_.getFileName.toString)
-      .contains("BENCH_REPS10_r10.json"))
-    assert(BenchCompare.latestRecord(
-      java.nio.file.Files.createTempDirectory("benchempty")).isEmpty)
   }
 }

@@ -1,93 +1,13 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.{Dedup, EntityResolution}
 
-/** Round-18 optimization laws: the stage-materialization policy switch
-  * (local vs reliable checkpoint, one conf — the round-17 verdict's
-  * localCheckpoint-proliferation item), Par.run's no-cancel +
-  * suppressed-failure contract, Jobs.labeled description restoration,
-  * and the restructured resolveDeltaMulti / nearDupDelta equivalences
-  * (their outputs are also oracle-pinned per round; these are the
-  * operator-level laws). */
+/** Operator laws for the restructured resolveDeltaMulti /
+  * nearDupDelta equivalences (their outputs are also oracle-pinned;
+  * these are the operator-level laws). */
 class Round18Spec extends SparkSpec {
 
   import spark.implicits._
-
-  // ------------------------------------------------------------------
-  // Stage.materialize policy
-  // ------------------------------------------------------------------
-
-  test("Stage.materialize default = localCheckpoint (truncated lineage, " +
-    "same rows); reliable mode = reliable checkpoint under the conf " +
-    "switch with no call-site change") {
-    val df = spark.range(100).select(col("id"), (col("id") * 2).as("v"))
-    val local = graft.util.Stage.materialize(df)
-    def isBarrier(d: org.apache.spark.sql.DataFrame): Boolean =
-      d.queryExecution.logical.isInstanceOf[
-        org.apache.spark.sql.execution.LogicalRDD]
-    assert(isBarrier(local), "default mode must checkpoint (plan barrier)")
-    assert(local.collect().map(_.getLong(1)).sorted.toSeq ==
-      df.collect().map(_.getLong(1)).sorted.toSeq)
-    val dir = java.nio.file.Files.createTempDirectory("stage_ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    spark.conf.set("spark.graft.checkpoint.reliable", "true")
-    try {
-      val reliable = graft.util.Stage.materialize(df)
-      assert(isBarrier(reliable), "reliable mode must checkpoint too")
-      assert(reliable.collect().map(_.getLong(1)).sorted.toSeq ==
-        df.collect().map(_.getLong(1)).sorted.toSeq)
-      // the reliable checkpoint actually landed in the checkpoint dir
-      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      try assert(files.filter(java.nio.file.Files.isRegularFile(_))
-        .count() > 0, "reliable checkpoint wrote no files")
-      finally files.close()
-    } finally spark.conf.set("spark.graft.checkpoint.reliable", "false")
-  }
-
-  // ------------------------------------------------------------------
-  // Par.run failure contract
-  // ------------------------------------------------------------------
-
-  test("Par.run: first failure (input order) propagates with the other " +
-    "legs' failures suppressed; successful legs still ran (no-cancel)") {
-    val ran = new java.util.concurrent.atomic.AtomicInteger(0)
-    val e = intercept[IllegalStateException](graft.util.Par.run[Int](Seq(
-      () => { ran.incrementAndGet(); 1 },
-      () => throw new IllegalStateException("leg-b"),
-      () => throw new IllegalArgumentException("leg-c"),
-      () => { ran.incrementAndGet(); 4 })))
-    assert(e.getMessage == "leg-b", "first failure in input order wins")
-    assert(e.getSuppressed.exists(_.getMessage == "leg-c"),
-      "later failures must attach via addSuppressed, not vanish")
-    assert(ran.get() == 2, "non-failing legs run to completion")
-  }
-
-  test("Par.run returns results in input order") {
-    assert(graft.util.Par.run[Int](
-      Seq(() => { Thread.sleep(50); 1 }, () => 2, () => 3)) == Seq(1, 2, 3))
-  }
-
-  // ------------------------------------------------------------------
-  // Jobs.labeled restoration
-  // ------------------------------------------------------------------
-
-  test("Jobs.labeled restores the caller's previous job description " +
-    "instead of clearing it (nested labels keep the outer scope)") {
-    val sc = spark.sparkContext
-    sc.setJobDescription("outer")
-    try {
-      graft.util.Jobs.labeled(sc, "inner") {
-        assert(sc.getLocalProperty("spark.job.description") == "inner")
-      }
-      assert(sc.getLocalProperty("spark.job.description") == "outer",
-        "outer label must survive a nested labeled region")
-    } finally sc.setJobDescription(null)
-    graft.util.Jobs.labeled(sc, "solo")(())
-    assert(sc.getLocalProperty("spark.job.description") == null,
-      "a null previous description must be restored as null")
-  }
 
   // ------------------------------------------------------------------
   // resolveDeltaMulti restructure equivalence

@@ -23,7 +23,9 @@ def run_verify():
     if r.returncode != 0:
         print(r.stdout[-4000:], r.stderr[-2000:])
         sys.exit("verify run failed")
-    for line in r.stdout.splitlines():
+    # Verify names a failed query on stderr, which sbt passes through
+    # unprefixed and apart from stdout
+    for line in (r.stdout + r.stderr).splitlines():
         if "[verify]" in line:
             print(line)
 
@@ -61,7 +63,7 @@ def compare(name, spark_df, oracle_df):
     # dtype drift is a FAILURE, not a note: the driver hashes TYPED
     # values, so spark int64 vs oracle float64 (e.g. a DuckDB HUGEINT
     # from sum(CASE...)) breaks its hash even when every value is
-    # numerically equal — exactly how q132 shipped red in round 13.
+    # numerically equal — exactly how q132 once failed its hash check.
     for col in a.columns:
         if str(a[col].dtype) != str(b[col].dtype):
             issues.append(f"dtype {col}: spark={a[col].dtype} oracle={b[col].dtype} (driver hashes typed values — cast the oracle)")
